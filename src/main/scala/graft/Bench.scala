@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query
@@ -97,6 +99,12 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
     }
 
+  /** One sweep run of one query: wall seconds (-1.0 when it failed),
+    * then the JVM-wide deltas over the run: GC milliseconds, Janino
+    * compiles and compile milliseconds (the driver codegen layer).
+    */
+  private case class SweepRun(sec: Double, gcMs: Long, compiles: Long, compileMs: Double)
+
   /** Mutable run state the snapshot builders read — one place, so the
     * shutdown hook and the final print can never disagree on shape.
     */
@@ -104,7 +112,7 @@ object Bench {
     var skew = "{}"; var skewMins = "{}"
     var ivf = "{}"; var ivfCompact = "{}"
     var names: Seq[String] = Nil
-    var raw: Map[String, Seq[(Double, Long)]] = Map.empty
+    var raw: Map[String, Seq[SweepRun]] = Map.empty
     var sweepSkipped: Seq[String] = Nil
     var streaming = "{}"; var streamingCompact = "{}"
     var scale = "{}"; var scaleRatios = "{}"
@@ -112,7 +120,7 @@ object Bench {
     var shed: List[String] = Nil
     def addShed(s: String): Unit = { shed = shed :+ s; System.err.println(s"[bench] budget shed: $s") }
     def results: Seq[(String, Double)] = names.filter(raw.contains).map { n =>
-      val rs = raw(n).map(_._1)
+      val rs = raw(n).map(_.sec)
       n -> (if (rs.contains(-1.0)) -1.0 else rs.min)
     }
   }
@@ -121,11 +129,8 @@ object Bench {
     val results = p.results
     val qs      = results.map { case (k, v) => "\"" + k + "\":" + fmtD(v) }.mkString("{", ",", "}")
     val measured = p.names.filter(p.raw.contains)
-    val sweepRepJson = measured.map { n =>
-      "\"" + n + "\":[" + p.raw(n).map(r => fmtD(r._1)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val sweepGcJson = measured.map { n =>
-      "\"" + n + "\":[" + p.raw(n).map(_._2.toString).mkString(",") + "]"
+    def perRep(f: SweepRun => String): String = measured.map { n =>
+      "\"" + n + "\":[" + p.raw(n).map(f).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val shedJson = p.shed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -134,7 +139,7 @@ object Bench {
       else s""","sweep_skipped":[${p.sweepSkipped.map("\"" + _ + "\"").mkString(",")}]"""
     val budgetJson =
       s""""budget":{"total_sec":${fmtD(totalBudget)},"spent_sec":${fmtD(benchElapsed)},"shed":$shedJson}"""
-    s"""{"metric":"total","value":${fmtD(total)},"unit":"sec","truncated":$truncated,$budgetJson,"queries":$qs$skippedJson,"sweep_reps":$sweepRepJson,"sweep_gc_ms":$sweepGcJson,"skew":${p.skew},"ivf":${p.ivf},"streaming":${p.streaming},"scale":${p.scale},"pipeline":${p.pipeline},"sf":"${p.sfDir}"}"""
+    s"""{"metric":"total","value":${fmtD(total)},"unit":"sec","truncated":$truncated,$budgetJson,"queries":$qs$skippedJson,"sweep_reps":${perRep(r => fmtD(r.sec))},"sweep_gc_ms":${perRep(_.gcMs.toString)},"sweep_compiles":${perRep(_.compiles.toString)},"sweep_compile_ms":${perRep(r => fmtD(r.compileMs))},"skew":${p.skew},"ivf":${p.ivf},"streaming":${p.streaming},"scale":${p.scale},"pipeline":${p.pipeline},"sf":"${p.sfDir}"}"""
   }
 
   // SELF-LIMITING compact line: the harness json-parses only the
@@ -257,12 +262,15 @@ object Bench {
     // and nothing in a min-only artifact could attribute either to
     // GC/ambient vs a plan change. SPARK_GRAFT_SWEEP_REPS overrides.
     val sweepReps = sys.env.getOrElse("SPARK_GRAFT_SWEEP_REPS", "2").toInt
-    def onceGc(name: String): (Double, Long) = {
+    def onceRun(name: String): SweepRun = {
       val g0 = gcMillis()
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val c0 = CodeGenerator.compileTime
       val t  = once(name)
-      (t, gcMillis() - g0)
+      SweepRun(t, gcMillis() - g0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+        (CodeGenerator.compileTime - c0) / 1e6)
     }
-    val rawBuf = scala.collection.mutable.LinkedHashMap.empty[String, Vector[(Double, Long)]]
+    val rawBuf = scala.collection.mutable.LinkedHashMap.empty[String, Vector[SweepRun]]
     // catastrophe floor: if the budget is nearly gone mid-rep, stop
     // the sweep and REPORT the un-run queries — a partial queries map
     // beats a SIGTERM'd empty one
@@ -276,7 +284,7 @@ object Bench {
           p.sweepSkipped = (p.sweepSkipped ++ rest).distinct
           p.addShed(s"sweep stopped with ${rest.size} queries unmeasured (budget floor)")
           stopped = true
-        } else rawBuf(n) = rawBuf.getOrElse(n, Vector.empty) :+ onceGc(n)
+        } else rawBuf(n) = rawBuf.getOrElse(n, Vector.empty) :+ onceRun(n)
       }
       p.raw = rawBuf.toMap
     }
@@ -297,7 +305,7 @@ object Bench {
       // 1's measured cost, and an overrun is absorbed by the trailing
       // sections' own slices.
       val reserve = EstStreaming1Rep + EstScaleMin + EstPipelineWarm
-      val est     = { val ts = names.flatMap(n => rawBuf.get(n).map(_.head._1)).filter(_ > 0); ts.sum }
+      val est     = { val ts = names.flatMap(n => rawBuf.get(n).map(_.head.sec)).filter(_ > 0); ts.sum }
       if (budgetLeft - reserve > est * 1.15) sweepRep(names)
       else {
         // GRADED shed: re-run the most expensive cells that fit the
@@ -314,12 +322,12 @@ object Bench {
         // whole-rep branch applies — so the overrun stays inside the
         // sweep's own slice.
         val slack = math.max(0.0, (budgetLeft - reserve) / 1.15)
-        val byCost = names.filter(n => rawBuf.get(n).exists(_.head._1 > 0))
-          .sortBy(n => -rawBuf(n).head._1)
+        val byCost = names.filter(n => rawBuf.get(n).exists(_.head.sec > 0))
+          .sortBy(n => -rawBuf(n).head.sec)
         val pick = scala.collection.mutable.LinkedHashSet.empty[String]
         var acc = 0.0
         byCost.foreach { n =>
-          val t = rawBuf(n).head._1
+          val t = rawBuf(n).head.sec
           if (acc + t <= slack) { acc += t; pick += n }
         }
         if (pick.isEmpty) p.addShed(s"sweep rep $rep dropped")
